@@ -17,8 +17,6 @@ Scale notes:
 
 from __future__ import annotations
 
-from decimal import Decimal
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -98,62 +96,39 @@ def eager_checkpoint(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-def values_df(spark: SparkSession, rows: list, schema_ddl: str) -> DataFrame:
-    """Small driver-local DataFrame as an inline VALUES table (LocalRelation).
+def values_df(spark: SparkSession, rows, schema) -> DataFrame:
+    """Driver rows as a DataFrame that plans as a ``LocalTableScan``: the
+    library's one way to turn Python rows into a DataFrame.
 
-    ``spark.createDataFrame(python_rows)`` parallelizes a Python RDD over
-    the default parallelism: every materialization (e.g. the broadcast
-    build these frames exist for) runs a 32-task job whose tasks each pay
-    a Python-worker round trip — measured ~0.3-0.4 s of blocked time per
-    such job inside x_perplexity_bucket, ~2 s of its wall clock. An inline
-    table is a JVM LocalRelation: broadcast builds collect it driver-side
-    with NO job and NO Python workers (micro-bench: 696 ms -> 217 ms per
-    broadcast-join materialization).
+    ``spark.createDataFrame(<python rows>)`` parallelizes a Python RDD, so
+    EVERY scan of the frame (a collect, a broadcast build, a join input)
+    runs a Spark job whose tasks start Python workers: measured on a
+    4-core box, one job and 175-210 ms per scan, even for ``[]``. The same
+    rows shipped as a ``pyarrow.Table`` become a JVM LocalRelation: scans
+    run no job and cost 6-13 ms. A LocalTableScan still spreads its rows
+    over up to ``defaultParallelism`` partitions, so a per-row
+    ``foreachPartition`` keeps its parallelism.
 
-    ``schema_ddl`` uses simple comma-separated ``name type`` pairs (no
-    parameterized types). Values may be str/int/float/bool/None; each
-    column is cast to its declared type."""
-    fields = []
-    depth = 0
-    cur = ""
-    for ch in schema_ddl + ",":
-        if ch == "," and depth == 0:
-            name, typ = cur.strip().split(None, 1)
-            if "<" in typ:
-                raise ValueError(f"values_df: nested type {typ!r} unsupported")
-            fields.append((name, typ))
-            cur = ""
-        else:
-            depth += ch in "(<"
-            depth -= ch in ")>"
-            cur += ch
-    if not rows:
-        return spark.createDataFrame([], schema_ddl)
+    ``schema`` is a StructType or a DDL string; nested types, decimals and
+    nulls are fine. Rows are tuples/Rows (by position) or dicts (by name).
+    Values are converted with ``schema.toInternal``, exactly as
+    ``createDataFrame`` converts them. That matters for timestamps: a naive
+    ``datetime`` is local wall-clock time (``time.mktime``), which is how
+    ``collect()`` returns it, whereas Arrow would read it as UTC and shift
+    it by the process's UTC offset."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def lit(v, typ: str) -> str:
-        if v is None:
-            return "NULL"
-        if isinstance(v, bool):
-            return "true" if v else "false"
-        if isinstance(v, int):
-            return f"{v}L"
-        if isinstance(v, float):
-            return f"CAST('{v!r}' AS DOUBLE)"
-        if isinstance(v, str):
-            return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-        if isinstance(v, Decimal):
-            return f"CAST('{v}' AS {typ})"
-        raise TypeError(f"values_df: unsupported literal {type(v).__name__}")
-
-    vals = ", ".join(
-        "(" + ", ".join(lit(v, fields[i][1]) for i, v in enumerate(r)) + ")"
-        for r in rows
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    internal = [schema.toInternal(r) for r in rows]
+    cols = list(zip(*internal)) if internal else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
     )
-    cols = ", ".join(
-        f"CAST(c{i} AS {typ}) AS {name}" for i, (name, typ) in enumerate(fields)
-    )
-    names = ", ".join(f"c{i}" for i in range(len(fields)))
-    return spark.sql(f"SELECT {cols} FROM VALUES {vals} AS T({names})")
+    return spark.createDataFrame(table, schema)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -24,7 +24,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from imagingdb_spark import api, flows, ingest
-from imagingdb_spark.catalog import IMAGING_SCHEMAS
+from imagingdb_spark.catalog import IMAGING_SCHEMAS, values_df
 from imagingdb_spark.jsonio import CONFIG_SCHEMA
 from imagingdb_spark.session import get_spark
 
@@ -94,7 +94,7 @@ def load_catalog(spark: SparkSession, catalog_dir: str) -> dict[str, DataFrame]:
         elif S.snapshot_exists(str(snap)):
             out[name] = S.snapshot_read(spark, str(snap))
         else:
-            out[name] = spark.createDataFrame([], schema)
+            out[name] = values_df(spark, [], schema)
     return out
 
 
@@ -138,7 +138,7 @@ def load_catalog_slice(
             return spark.read.schema(IMAGING_SCHEMAS[name]).parquet(str(p))
         if S.snapshot_exists(str(snap)):
             return S.snapshot_read(spark, str(snap))
-        return spark.createDataFrame([], IMAGING_SCHEMAS[name])
+        return values_df(spark, [], IMAGING_SCHEMAS[name])
 
     def _pruned(name: str, where: list) -> DataFrame:
         if atomic:

@@ -26,6 +26,7 @@ from imagingdb_spark.api import (
     select_frames_subset,
     validate_serial,
 )
+from imagingdb_spark.catalog import IMAGING_SCHEMAS, values_df
 from imagingdb_spark.ingest import (
     frame_file_name,
     idempotent_append,
@@ -40,6 +41,10 @@ from imagingdb_spark.sources import basename, split_tiff_pages
 # Blob-namespace roots (cli/data_uploader.py:14-15)
 FILE_FOLDER_NAME = "raw_files"
 FRAME_FOLDER_NAME = "raw_frames"
+
+# driver-side id maps joined into the child tables' rows
+DS_MAP_DDL = "dataset_serial string, dataset_id long"
+SERIAL_TO_FG_DDL = "dataset_serial string, frames_global_id long"
 
 # config_json defaults for the splitter grid + image dims; the reference
 # reads dims/bit-depth from the decoded frames (file_splitter.py:153-176),
@@ -174,11 +179,7 @@ def insert_frames(
     }
     for r in new_ds.select("dataset_serial", "id").collect():
         ds_ids[r["dataset_serial"]] = r["id"]
-    ds_map = spark.createDataFrame(
-        list(ds_ids.items()), "dataset_serial string, dataset_id long"
-    ) if ds_ids else spark.createDataFrame(
-        [], "dataset_serial string, dataset_id long"
-    )
+    ds_map = values_df(spark, list(ds_ids.items()), DS_MAP_DDL)
 
     # A4: per-dataset global metadata from the actual frame rows
     summary = frames_rows.groupBy("dataset_serial").agg(
@@ -229,9 +230,10 @@ def insert_frames(
     }
     for r in new_fg.select("dataset_id", "id").collect():
         fg_ids[r["dataset_id"]] = r["id"]
-    serial_to_fg = datasets.sparkSession.createDataFrame(
+    serial_to_fg = values_df(
+        spark,
         [(s, fg_ids[d]) for s, d in ds_ids.items() if d in fg_ids],
-        "dataset_serial string, frames_global_id long",
+        SERIAL_TO_FG_DDL,
     )
     wf = Window.partitionBy(F.lit(0)).orderBy("dataset_serial", "file_name")  # batch-sized
 
@@ -264,8 +266,6 @@ def _guard_legacy_catalog(catalog_dir: str) -> None:
     the same directory: catalog readers would silently lose every
     pre-existing dataset (snapcatalog guards the per-table snapshot form
     itself; this guards the legacy ``<name>.parquet`` form)."""
-    from imagingdb_spark.catalog import IMAGING_SCHEMAS
-
     for name in IMAGING_SCHEMAS:
         p = os.path.join(catalog_dir, f"{name}.parquet")
         if os.path.exists(p):
@@ -275,6 +275,27 @@ def _guard_legacy_catalog(catalog_dir: str) -> None:
                 "would shadow it. Use the per-table paths, or migrate "
                 "the catalog first."
             )
+
+
+def _collect_ds_delta(
+    spark: SparkSession,
+    new_ds: DataFrame,
+    ds_view: DataFrame,
+    batch_serials: list[str],
+) -> tuple[DataFrame, dict]:
+    """Run an atomic builder's data_set delta ONCE: its collected rows give
+    the serial -> dataset id map (delta plus the batch's rows already in
+    the tip) AND come back as the delta frame the commit writes, so the
+    delta's plan is not re-run by catalog_commit. Batch-sized rows."""
+    ds_ids = {
+        r["dataset_serial"]: r["id"]
+        for r in ds_view.filter(
+            F.col("dataset_serial").isin(batch_serials)
+        ).select("dataset_serial", "id").collect()
+    }
+    rows = new_ds.collect()
+    ds_ids.update((r["dataset_serial"], r["id"]) for r in rows)
+    return values_df(spark, rows, new_ds.schema), ds_ids
 
 
 def insert_frames_atomic(
@@ -300,7 +321,6 @@ def insert_frames_atomic(
     three deltas anti-join empty and no new version publishes."""
     from imagingdb_spark import snapcatalog as C
     from imagingdb_spark.api import serial_to_date_time
-    from imagingdb_spark.catalog import IMAGING_SCHEMAS
 
     _guard_legacy_catalog(catalog_dir)
     spark = datasets.sparkSession
@@ -324,11 +344,7 @@ def insert_frames_atomic(
     def build(views: dict[str, DataFrame]) -> dict[str, DataFrame]:
         def view(name: str) -> DataFrame:
             v = views.get(name)
-            return (
-                v
-                if v is not None
-                else spark.createDataFrame([], IMAGING_SCHEMAS[name])
-            )
+            return v if v is not None else values_df(spark, [], IMAGING_SCHEMAS[name])
 
         ds_view, fg_view, fr_view = (
             view("data_set"), view("frames_global"), view("frames")
@@ -357,18 +373,8 @@ def insert_frames_atomic(
             )
             .select(*ds_fields)
         )
-        ds_ids = {
-            r["dataset_serial"]: r["id"]
-            for r in ds_view.filter(
-                F.col("dataset_serial").isin(batch_serials)
-            ).select("dataset_serial", "id").collect()
-        }
-        for r in new_ds.select("dataset_serial", "id").collect():
-            ds_ids[r["dataset_serial"]] = r["id"]
-        ds_map = spark.createDataFrame(
-            list(ds_ids.items()) or [],
-            "dataset_serial string, dataset_id long",
-        )
+        new_ds, ds_ids = _collect_ds_delta(spark, new_ds, ds_view, batch_serials)
+        ds_map = values_df(spark, list(ds_ids.items()), DS_MAP_DDL)
         mxf = fg_view.agg(F.coalesce(F.max("id"), F.lit(0))).collect()[0][0]
         new_fg = (
             datasets.join(summary, "dataset_serial")
@@ -397,11 +403,15 @@ def insert_frames_atomic(
                 F.col("dataset_id").isin(list(ds_ids.values()) or [-1])
             ).select("dataset_id", "id").collect()
         }
-        for r in new_fg.select("dataset_id", "id").collect():
-            fg_ids[r["dataset_id"]] = r["id"]
-        serial_to_fg = spark.createDataFrame(
+        # collected once, like the ds delta: the id map below and the
+        # commit's write both read these rows
+        fg_rows = new_fg.collect()
+        fg_ids.update((r["dataset_id"], r["id"]) for r in fg_rows)
+        new_fg = values_df(spark, fg_rows, new_fg.schema)
+        serial_to_fg = values_df(
+            spark,
             [(s, fg_ids[d]) for s, d in ds_ids.items() if d in fg_ids],
-            "dataset_serial string, frames_global_id long",
+            SERIAL_TO_FG_DDL,
         )
         mxr = fr_view.agg(F.coalesce(F.max("id"), F.lit(0))).collect()[0][0]
         new_fr = (
@@ -450,7 +460,6 @@ def insert_file_atomic(
     twin of insert_frames_atomic."""
     from imagingdb_spark import snapcatalog as C
     from imagingdb_spark.api import serial_to_date_time
-    from imagingdb_spark.catalog import IMAGING_SCHEMAS
 
     _guard_legacy_catalog(catalog_dir)
     spark = new_files.sparkSession
@@ -462,11 +471,7 @@ def insert_file_atomic(
     def build(views: dict[str, DataFrame]) -> dict[str, DataFrame]:
         def view(name: str) -> DataFrame:
             v = views.get(name)
-            return (
-                v
-                if v is not None
-                else spark.createDataFrame([], IMAGING_SCHEMAS[name])
-            )
+            return v if v is not None else values_df(spark, [], IMAGING_SCHEMAS[name])
 
         ds_view, fgl_view = view("data_set"), view("file_global")
         rows = new_files.select(
@@ -494,18 +499,8 @@ def insert_file_atomic(
                 "date_time", "parent_id", "id",
             )
         )
-        ds_ids = {
-            r["dataset_serial"]: r["id"]
-            for r in ds_view.filter(
-                F.col("dataset_serial").isin(batch_serials)
-            ).select("dataset_serial", "id").collect()
-        }
-        for r in new_ds.select("dataset_serial", "id").collect():
-            ds_ids[r["dataset_serial"]] = r["id"]
-        ds_map = spark.createDataFrame(
-            list(ds_ids.items()) or [],
-            "dataset_serial string, dataset_id long",
-        )
+        new_ds, ds_ids = _collect_ds_delta(spark, new_ds, ds_view, batch_serials)
+        ds_map = values_df(spark, list(ds_ids.items()), DS_MAP_DDL)
         mxf = fgl_view.agg(F.coalesce(F.max("id"), F.lit(0))).collect()[0][0]
         new_fgl = (
             new_files.select(
@@ -576,12 +571,15 @@ def upload_dataset(
     `assert_unique_id` + overwrite flag become convergent semantics; pass
     `overwrite=True` only to force blob rewrite.
 
-    Scale shape: the split+hash runs as one Arrow-batched mapInPandas over
-    a binaryFile scan (one task per source file ≥ one split each), the
-    frame rows are persisted ONCE so the blob write and the catalog insert
-    don't re-decode (the payload rides executor memory/disk for the
-    duration of the upload batch — dataset-batch-sized, not corpus-sized),
-    and catalog appends are anti-join guarded. `paths` (table name →
+    Scale shape: the manifest is batch-sized (one row per dataset of the
+    upload), so it is collected ONCE and every later plan reads that local
+    copy (a LocalTableScan) instead of re-scanning the caller's frame. The
+    split+hash runs as one Arrow-batched mapInPandas over a binaryFile
+    scan (one task per source file ≥ one split each), the frame rows are
+    persisted ONCE so the blob write and the catalog insert don't
+    re-decode (the payload rides executor memory/disk for the duration of
+    the upload batch — dataset-batch-sized, not corpus-sized), and
+    catalog appends are anti-join guarded. `paths` (table name →
     parquet path) persists the three catalog tables. `backend_factory`
     overrides the blob store (the reference's local-vs-S3 storage_class
     switch, data_uploader.py:127-134): pass e.g.
@@ -594,24 +592,25 @@ def upload_dataset(
     assert upload_type in {"file", "frames"}, (
         f"upload_type should be 'file' or 'frames', not {upload_type}"
     )
-    bad = validate_manifest(manifest).select("dataset_serial").collect()
-    if bad:  # manifest is catalog-batch-sized; collect is bounded
+    # batch-sized: collected once, so no later plan re-scans the caller's
+    # frame (see "Scale shape")
+    cols = manifest.select(
+        "dataset_serial",
+        F.col("file_name").alias("src_path"),
+        "description",
+        "parent_dataset_id",
+    )
+    man_rows = cols.collect()
+    man = values_df(spark, man_rows, cols.schema)
+    bad = validate_manifest(man).select("dataset_serial").collect()
+    if bad:
         raise AssertionError(f"Invalid ID: {bad[0]['dataset_serial']}")
 
     folder = FRAME_FOLDER_NAME if upload_type == "frames" else FILE_FOLDER_NAME
-    man = (
-        manifest.select(
-            "dataset_serial",
-            F.col("file_name").alias("src_path"),
-            "description",
-            "parent_dataset_id",
-        )
-        .withColumn(
-            "storage_dir",
-            F.concat_ws("/", F.lit(folder), F.col("dataset_serial")),
-        )
+    man = man.withColumn(
+        "storage_dir", F.concat_ws("/", F.lit(folder), F.col("dataset_serial"))
     )
-    src_paths = [r["src_path"] for r in man.select("src_path").collect()]
+    src_paths = [r["src_path"] for r in man_rows]
     blobs = (
         spark.read.format("binaryFile")
         .load(src_paths)
@@ -814,7 +813,9 @@ def fetch_files_backend(
     writing to a mounted/teamed filesystem)."""
     os.makedirs(dest_dir, exist_ok=True)
     rows = [(f"{storage_dir}/{n}", n) for n in file_names]
-    df = spark.createDataFrame(rows, "key string, file_name string")
+    # a LocalTableScan spreads its rows over up to defaultParallelism
+    # partitions, so the pulls below still run in parallel
+    df = values_df(spark, rows, "key string, file_name string")
 
     def pull(it) -> None:
         from pyspark import TaskContext
@@ -855,7 +856,7 @@ def download_dataset(
     file_global). `storage_root` prefixes storage_dir for the blob fetch
     (the reference's mount_point / access_point)."""
     ok = (
-        spark.createDataFrame([(dataset_serial,)], "s string")
+        values_df(spark, [(dataset_serial,)], "s string")
         .select(validate_serial(F.col("s")).alias("ok"))
         .collect()[0]["ok"]
     )

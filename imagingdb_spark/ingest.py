@@ -194,7 +194,8 @@ def insert_file(
     # attempt's parent row still maps its file_global child, so a re-run
     # repairs the crash window between the two commits (the healing rule
     # flows.insert_frames documents). Batch-sized driver mapping.
-    from imagingdb_spark.flows import _table_view
+    from imagingdb_spark.catalog import values_df
+    from imagingdb_spark.flows import DS_MAP_DDL, _table_view
 
     spark = new_files.sparkSession
     batch_serials = [
@@ -209,9 +210,7 @@ def insert_file(
     }
     for r in appended_ds.select("dataset_serial", "id").collect():
         ds_ids[r["dataset_serial"]] = r["id"]
-    ds_map = spark.createDataFrame(
-        list(ds_ids.items()), "dataset_serial string, dataset_id long"
-    )
+    ds_map = values_df(spark, list(ds_ids.items()), DS_MAP_DDL)
 
     def _fg_build(existing: DataFrame) -> DataFrame:
         mx = existing.agg(F.coalesce(F.max("id"), F.lit(0))).collect()[0][0]

@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from imagingdb_spark.catalog import eager_checkpoint, table
+from imagingdb_spark.catalog import eager_checkpoint, table, values_df
 from imagingdb_spark.operators.text import tokens_col
 from imagingdb_spark.registry import query
 
@@ -1408,7 +1408,8 @@ def x_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_truth = truth.count()
     n_lsh = lsh.count()
     n_hits = hits.count()
-    return spark.createDataFrame(
+    return values_df(
+        spark,
         [(
             n_truth,
             n_lsh,

@@ -889,8 +889,8 @@ def x_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         syms = syms.mapInPandas(
             _bpe_apply_merge(row["a"], row["b"]), schema
         ).localCheckpoint()
-    return spark.createDataFrame(
-        merges, "rank int, left string, right string, pair_freq bigint"
+    return values_df(
+        spark, merges, "rank int, left string, right string, pair_freq bigint"
     )
 
 
@@ -1051,7 +1051,7 @@ def x_perplexity_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache (r11; the event log had shown the vocab aggregate evaluated
     # twice — exchange reuse does not fire across cached-plan boundaries —
     # and ~2 s of 32-task Python `parallelize` jobs from
-    # createDataFrame-built boundary frames, now VALUES LocalRelations).
+    # createDataFrame-built boundary frames, now values_df LocalRelations).
     dt = dt.persist()
     v = dt.groupBy("lang", "tok").agg(F.sum("c").alias("cnt")).persist()
     tot_rows = [
@@ -1316,7 +1316,7 @@ def lm_score_counts(dt: DataFrame, state: DataFrame) -> DataFrame:
     fold twin that derived the state partials from the same counts) skip
     the second tokenize+explode corpus pass lm_score would pay."""
     # language totals are a handful of rows over the (vocab-sized,
-    # checkpointed) state: collect them and join a VALUES LocalRelation
+    # checkpointed) state: collect them and join a values_df LocalRelation
     # instead of an aggregate broadcast subquery — one fewer exec-time
     # job, byte-identical totals (exact integer sums cast to double)
     tot_rows = [

@@ -35,7 +35,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from imagingdb_spark.catalog import table
+from imagingdb_spark.catalog import table, values_df
 from imagingdb_spark.registry import query
 
 QUERY_VEC_ID = 0  # the probe vector for top-k queries
@@ -723,7 +723,8 @@ def x_ann_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh = {r["vec_id"] for r in x_ann_lsh(spark, sf_dir).collect()}
     ivf = {r["vec_id"] for r in x_ann_ivf(spark, sf_dir).collect()}
     k = len(exact)
-    return spark.createDataFrame(
+    return values_df(
+        spark,
         [(
             k,
             round(len(exact & lsh) / k, 4) if k else 1.0,
@@ -764,7 +765,8 @@ def x_semdedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_truth = truth.count()
     n_found = found.count()
     n_hit = truth.join(found, ["vec_a", "vec_b"], "inner").count()
-    return spark.createDataFrame(
+    return values_df(
+        spark,
         [(
             n_truth,
             n_found,
@@ -871,7 +873,8 @@ def x_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     idcg = sum(
         1.0 / math.log2(i + 2) for i in range(min(RETRIEVAL_K, n_rel))
     )
-    return spark.createDataFrame(
+    return values_df(
+        spark,
         [(
             int(n_rel),
             round(mrr, 4),

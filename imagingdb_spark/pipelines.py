@@ -38,7 +38,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from imagingdb_spark.catalog import table
+from imagingdb_spark.catalog import table, values_df
 from imagingdb_spark.operators.dedup import (
     CONTAM_K,
     minhash_pairs,
@@ -183,7 +183,8 @@ def _register() -> None:
         behavior: any stage silently passing everything (or nothing)
         shows up as a changed count."""
         _, audit = pretraining_pipeline(spark, sf_dir)
-        return spark.createDataFrame(
+        return values_df(
+            spark,
             [(i, a.stage, a.rows_in, a.rows_out) for i, a in enumerate(audit)],
             "stage_idx int, stage string, rows_in long, rows_out long",
         )

@@ -78,7 +78,9 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
+
+from imagingdb_spark.catalog import values_df
 
 MANIFEST_DIR = "_manifests"
 GROUPS_DIR = "groups"  # manifest-group files, under MANIFEST_DIR
@@ -839,10 +841,11 @@ def _dv_union(
     per-CALLER memo — a multi-leg reader (x_snapshot_scan's seven reads)
     passes one dict so identical sidecar unions are built once; each
     DataFrameReader.parquet call is a py4j round trip + JVM file-index
-    build (~40-80 ms measured), pure driver time. Keys carry the exact
-    (pair-set) identity, so two legs share a frame ONLY when their
-    resolved refs are identical — never across differing dv chains."""
-    key = ("dv", tuple(sorted(pairs)))
+    build (~40-80 ms measured), pure driver time. Keys carry the table
+    dir and the exact pair set, so two legs share a frame ONLY when they
+    read the same table's identical refs — never across differing dv
+    chains, nor across tables whose relative paths coincide."""
+    key = ("dv", table_dir, tuple(sorted(pairs)))
     if scan_cache is not None and key in scan_cache:
         return scan_cache[key]
     from pyspark.sql import functions as F
@@ -873,7 +876,7 @@ def _eq_union(
     candidate entry of its commit). Expanded size = Σ_entry ref.n by
     construction — what the broadcast ceiling is checked against.
     ``scan_cache``: same exact-pair-set memo as ``_dv_union``."""
-    key = ("eq", tuple(sorted(pairs)))
+    key = ("eq", table_dir, tuple(sorted(pairs)))
     if scan_cache is not None and key in scan_cache:
         return scan_cache[key]
     from pyspark.sql import functions as F
@@ -884,9 +887,7 @@ def _eq_union(
     out = None
     for sc, ps in sorted(by_sc.items()):
         keys = spark.read.parquet(os.path.join(table_dir, sc))
-        paths = spark.createDataFrame(
-            [(p,) for p in sorted(set(ps))], "path string"
-        )
+        paths = values_df(spark, [(p,) for p in sorted(set(ps))], "path string")
         d = keys.crossJoin(paths).select("path", "key")
         out = d if out is None else out.unionByName(d)
     if scan_cache is not None:
@@ -977,18 +978,19 @@ def _read_entries(
     falls back to a shuffled anti-join instead of a driver-size-bounded
     broadcast."""
     if not entries:
-        return spark.createDataFrame([], schema)
+        return values_df(spark, [], schema)
     plain = [
         fe for fe in entries if not fe.get("dv") and not fe.get("eq")
     ]
     refd = [fe for fe in entries if fe.get("dv") or fe.get("eq")]
 
     def _scan(fes: list[dict]) -> DataFrame:
-        # memoized per caller-supplied cache (r12): two legs of one
-        # multi-read query resolving the SAME file list (same schema —
-        # the key carries both) share one reader/file-index build
+        # memoized per caller-supplied cache: two legs of one multi-read
+        # query resolving the SAME files of the SAME table (same schema;
+        # the key carries all three) share one reader/file-index build
         key = (
             "scan",
+            table_dir,
             schema.json(),
             tuple(sorted(fe["path"] for fe in fes)),
         )
@@ -1343,7 +1345,7 @@ def snapshot_idempotent_append_delta(
             # as vacuum debris)
             shutil.rmtree(os.path.join(table_dir, rel_dir), ignore_errors=True)
             _drop_sidecar(table_dir, rel_dir)
-            return parent, spark.createDataFrame([], schema)
+            return parent, values_df(spark, [], schema)
         base_groups, legacy_delta = _base_delta(base)
         groups = _child_groups(
             table_dir, base_groups, legacy_delta + files, created
@@ -1362,7 +1364,7 @@ def snapshot_idempotent_append_delta(
                     *[os.path.join(table_dir, f["path"]) for f in files]
                 )
                 if files
-                else spark.createDataFrame([], schema)
+                else values_df(spark, [], schema)
             )
             return parent + 1, delta
         except SnapshotConflict:
@@ -2183,7 +2185,12 @@ def snapshot_upsert_eq(
         return txn is not None and txn[1] <= m.get("txns", {}).get(txn[0], -1)
 
     keys_df = (
-        spark.createDataFrame([(k,) for k in keys], ["__k"]) if keys else None
+        values_df(
+            spark, [(k,) for k in keys],
+            StructType([StructField("__k", key_src.schema[0].dataType)]),
+        )
+        if keys
+        else None
     )
     created: list[str] = []
     for _ in range(max_retries):
@@ -3417,7 +3424,7 @@ def _dv_delta_rows(
             rw_pos = rw_pos.exceptAll(_dv_union(spark, table_dir, old_pairs))
         new_pos = rw_pos if new_pos is None else new_pos.unionByName(rw_pos)
     if new_pos is None:  # every changed ref kept its chain (n-only drift)
-        return spark.createDataFrame([], schema)
+        return values_df(spark, [], schema)
     pos = new_pos.select(
         F.col("path").alias("__dv_path"), F.col("pos").alias("__dv_pos")
     )
@@ -3579,7 +3586,7 @@ def snapshot_changes(
             files_added=len(entries),
         )
     if not entries:
-        return spark.createDataFrame([], schema)
+        return values_df(spark, [], schema)
     return spark.read.schema(schema).parquet(
         *[os.path.join(table_dir, fe["path"]) for fe in entries]
     )
@@ -3771,9 +3778,10 @@ def _commit_row_changes(
 
 
 def _cdf_empty(spark: SparkSession, end_schema: StructType) -> DataFrame:
-    from pyspark.sql.types import IntegerType, StringType, StructField
+    from pyspark.sql.types import IntegerType, StringType
 
-    return spark.createDataFrame(
+    return values_df(
+        spark,
         [],
         StructType(
             list(end_schema.fields)

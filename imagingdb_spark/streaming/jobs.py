@@ -24,6 +24,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from imagingdb_spark.catalog import values_df
+
+
 def read_events_stream(
     spark: SparkSession, sf_dir: str, schema: T.StructType | None = None
 ) -> DataFrame:
@@ -1186,7 +1189,7 @@ def _screen_ids(
         return small
     if len(present) <= ISIN_SCREEN_MAX:
         return small.filter(~F.col(id_col).isin(*present))
-    ids = spark.createDataFrame([(i,) for i in present], id_ddl)
+    ids = values_df(spark, [(i,) for i in present], id_ddl)
     return small.join(F.broadcast(ids), id_col, "left_anti")
 
 
@@ -1448,7 +1451,7 @@ def streaming_dedup_gate(
                         where=[("doc_id", "in", cdocs)],
                     )
                     if cdocs
-                    else spark.createDataFrame([], batch_tok.schema)
+                    else values_df(spark, [], batch_tok.schema)
                 )
             else:
                 corpus_tok = spark.read.parquet(idx_tokset_path)
@@ -1596,9 +1599,7 @@ def write_embed_codebook(spark: SparkSession, codebook_path: str, cents) -> None
     K rows, one file; the _SUCCESS marker doubles as the gate's
     torn-write detector."""
     rows = [(i, [float(x) for x in c]) for i, c in enumerate(cents)]
-    spark.createDataFrame(
-        rows, "cell int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(codebook_path)
+    values_df(spark, rows, "cell int, centroid array<double>").coalesce(1).write.mode("overwrite").parquet(codebook_path)
 
 
 def read_embed_codebook(spark: SparkSession, codebook_path: str):
@@ -2427,8 +2428,8 @@ def _cdc_empty_state(
     spark: SparkSession, batch_df: DataFrame, key: str, attrs: list[str]
 ) -> DataFrame:
     """Typed empty CDC state: (key, attrs..., last_seq=0)."""
-    return spark.createDataFrame(
-        [], batch_df.select(key, *attrs).schema
+    return values_df(
+        spark, [], batch_df.select(key, *attrs).schema
     ).withColumn("last_seq", F.lit(0).cast("bigint"))
 
 

@@ -13,7 +13,8 @@ from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+REPO_ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO_ROOT))
 
 from imagingdb_spark.catalog import (
     DATA_SET_SCHEMA,
@@ -85,15 +86,16 @@ def imaging(spark):
     }
 
 
-# --- slow-tier marking (round 12, VERDICT r11 item 1) -----------------------
-# The full suite (1020 tests) measures ~46-97 min wall — past the driver's
-# verify budget, so `VERIFY_r11.json` recorded tests_ok=false on a suite with
-# ZERO failures. tests/slow_tests.txt lists every test measured at >= 3 s
-# (soak/crash-matrix/stress tiers; durations archived in
-# tools/test_durations_r12.txt); they get pytest.mark.slow here and
-# pytest.ini deselects the mark by default, leaving a <10-min core selection
-# that still covers every operator. The FULL suite remains one flag away
-# (`pytest tests/ -m ''`) and the builder gate runs it.
+# --- slow-tier marking -------------------------------------------------------
+# tests/slow_tests.txt lists every test measured at >= 3 s (soak,
+# crash-matrix and stress tiers; durations archived in
+# tools/test_durations_r12.txt). They get pytest.mark.slow here and
+# pytest.ini deselects the mark by default, leaving a core selection that
+# still covers every operator; `pytest tests/ -m ''` runs everything.
+# Entries are matched against the test file's path relative to the
+# repository root plus the test name, never against the node id: node ids
+# are relative to pytest's rootdir, so under another --rootdir they would
+# silently match nothing.
 
 import re as _re
 
@@ -111,13 +113,20 @@ def _slow_bases() -> set[str]:
     return out
 
 
+def _repo_test_id(item) -> str:
+    """``tests/test_x.py::Class::test[param]`` whatever the rootdir."""
+    rel = Path(item.path).resolve().relative_to(REPO_ROOT).as_posix()
+    return f"{rel}::{item.nodeid.split('::', 1)[1]}"
+
+
 def pytest_collection_modifyitems(config, items):
     slow = _slow_bases()
     if not slow:
         return
     for item in items:
-        # exact node id first (single slow params of an otherwise-fast
+        # exact id first (single slow params of an otherwise-fast
         # parametrized test), then the param-stripped base (every param
         # of a slow test inherits the mark)
-        if item.nodeid in slow or _re.sub(r"\[.*\]$", "", item.nodeid) in slow:
+        tid = _repo_test_id(item)
+        if tid in slow or _re.sub(r"\[.*\]$", "", tid) in slow:
             item.add_marker(pytest.mark.slow)

@@ -90,6 +90,91 @@ class TestCommitAndRead:
             S.snapshot_read(spark, t, version=7)
 
 
+class TestScanCacheTableIdentity:
+    """A ``scan_cache`` shared by reads of two table dirs must key every
+    memoized frame by its table: two tables with the same schema and the
+    same relative file names (a copied table) hold different rows."""
+
+    @staticmethod
+    def _rewrite(root, sub, fn):
+        """Rewrite every parquet file under ``root/sub`` in place with
+        ``fn(table)``, keeping its name (and dropping its now-stale
+        Hadoop checksum)."""
+        import pyarrow.parquet as pq
+
+        for d, _, names in os.walk(os.path.join(root, sub)):
+            for n in names:
+                if n.endswith(".parquet"):
+                    p = os.path.join(d, n)
+                    pq.write_table(fn(pq.read_table(p)), p)
+                    crc = os.path.join(d, f".{n}.crc")
+                    if os.path.exists(crc):
+                        os.unlink(crc)
+
+    def _copy_with(self, src, dst, data_fn, sidecar_dir, sidecar_fn):
+        import shutil
+
+        shutil.copytree(src, dst)
+        self._rewrite(dst, S.DATA_DIR, data_fn)
+        self._rewrite(dst, sidecar_dir, sidecar_fn)
+
+    @staticmethod
+    def _shift_k(table):
+        import pyarrow.compute as pc
+
+        return table.set_column(0, "k", pc.add(table["k"], 10))
+
+    def test_plain_and_dv_reads(self, spark, tmp_path):
+        import pyarrow as pa
+
+        a, b = str(tmp_path / "a"), str(tmp_path / "b")
+        S.snapshot_commit(
+            spark, a, _mk(spark, [(0, "a"), (1, "b"), (2, "c")]).coalesce(1)
+        )
+        plain = [(0, "a"), (1, "b"), (2, "c")]
+        cache: dict = {}
+        assert _rows(S.snapshot_read(spark, a, scan_cache=cache)) == plain
+        S.snapshot_delete(spark, a, [("k", "=", 0)], mode="dv")
+
+        def pos_2(t):
+            return t.set_column(
+                t.schema.get_field_index("pos"), "pos",
+                pa.array([2] * t.num_rows, t.schema.field("pos").type),
+            )
+
+        # b: same relative paths; k shifted by 10 and row 2 deleted, not 0
+        self._copy_with(a, b, self._shift_k, S.DELETES_DIR, pos_2)
+        assert _rows(S.snapshot_read(spark, a, scan_cache=cache)) == [
+            (1, "b"), (2, "c")]
+        assert _rows(S.snapshot_read(spark, b, version=1, scan_cache=cache)) == [
+            (10, "a"), (11, "b"), (12, "c")]
+        assert _rows(S.snapshot_read(spark, b, scan_cache=cache)) == [
+            (10, "a"), (11, "b")]
+
+    def test_equality_delete_reads(self, spark, tmp_path):
+        import pyarrow as pa
+
+        a, b = str(tmp_path / "a"), str(tmp_path / "b")
+        S.snapshot_commit(
+            spark, a, _mk(spark, [(0, "a"), (1, "b"), (2, "c")]).coalesce(1)
+        )
+        S.snapshot_upsert_eq(spark, a, _mk(spark, [(1, "B")]), "k")
+        cache: dict = {}
+        assert _rows(S.snapshot_read(spark, a, scan_cache=cache)) == [
+            (0, "a"), (1, "B"), (2, "c")]
+
+        def key_2(t):
+            return t.set_column(
+                0, t.schema.field(0).name,
+                pa.array([2] * t.num_rows, t.schema.field(0).type),
+            )
+
+        # b: same relative paths, but its equality delete names key 2
+        self._copy_with(a, b, lambda t: t, S.EQDELETES_DIR, key_2)
+        assert _rows(S.snapshot_read(spark, b, scan_cache=cache)) == [
+            (0, "a"), (1, "B"), (1, "b")]
+
+
 class TestCrashSafety:
     def test_torn_data_write_is_invisible(self, spark, tmp_path):
         """A crash after data files land but before the manifest link:
