@@ -14,16 +14,19 @@ api.DatasetNotFoundError. Batch-wise where the reference is per-row.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from imagingdb_spark import sinks
 from imagingdb_spark.api import (
     get_frames_meta,
     get_global_meta,
     select_frames_subset,
+    serial_to_date_time,
     validate_serial,
 )
 from imagingdb_spark.catalog import IMAGING_SCHEMAS, values_df
@@ -45,6 +48,13 @@ FRAME_FOLDER_NAME = "raw_frames"
 # driver-side id maps joined into the child tables' rows
 DS_MAP_DDL = "dataset_serial string, dataset_id long"
 SERIAL_TO_FG_DDL = "dataset_serial string, frames_global_id long"
+
+# column order of the data_set rows every upload path writes
+DS_FIELDS = (
+    "dataset_serial", "description", "microscope", "frames", "date_time",
+    "parent_id", "id",
+)
+DS_DELTA_SCHEMA = StructType([IMAGING_SCHEMAS["data_set"][c] for c in DS_FIELDS])
 
 # config_json defaults for the splitter grid + image dims; the reference
 # reads dims/bit-depth from the decoded frames (file_splitter.py:153-176),
@@ -123,8 +133,6 @@ def insert_frames(
     one grouped aggregation, map-side partial, instead of the reference's
     imperative per-dataset loop. Surrogate ids are max(existing)+row_number
     (catalog-sized window; single-writer batch semantics)."""
-    from imagingdb_spark.api import serial_to_date_time
-
     paths = paths or {}
     w = Window.partitionBy(F.lit(0)).orderBy("dataset_serial")  # catalog-batch-sized
 
@@ -150,13 +158,9 @@ def insert_frames(
             "id", (F.row_number().over(w) + F.lit(mx)).cast("long")
         )
 
-    ds_fields = [
-        "dataset_serial", "description", "microscope", "frames",
-        "date_time", "parent_id", "id",
-    ]
     new_ds = idempotent_append(
         _ds_build, data_set, ["dataset_serial"], paths.get("data_set")
-    ).select(*ds_fields)
+    ).select(*DS_FIELDS)
 
     # serial -> ds id for EVERY batch serial, from post-commit truth:
     # this run's delta plus rows already catalogued — including a parent
@@ -277,25 +281,93 @@ def _guard_legacy_catalog(catalog_dir: str) -> None:
             )
 
 
-def _collect_ds_delta(
-    spark: SparkSession,
-    new_ds: DataFrame,
-    ds_view: DataFrame,
-    batch_serials: list[str],
-) -> tuple[DataFrame, dict]:
-    """Run an atomic builder's data_set delta ONCE: its collected rows give
-    the serial -> dataset id map (delta plus the batch's rows already in
-    the tip) AND come back as the delta frame the commit writes, so the
-    delta's plan is not re-run by catalog_commit. Batch-sized rows."""
-    ds_ids = {
-        r["dataset_serial"]: r["id"]
-        for r in ds_view.filter(
-            F.col("dataset_serial").isin(batch_serials)
+def _batch_rows(batch: DataFrame, *cols: str) -> dict:
+    """serial -> the batch's first row for it, with the data_set columns
+    derived by Spark. Batch-sized; a projection of a local relation (the
+    upload manifest) collects without a job."""
+    rows = batch.select(
+        "dataset_serial",
+        "description",
+        F.col("microscope").cast("string").alias("microscope"),
+        serial_to_date_time(F.col("dataset_serial")).alias("date_time"),
+        normalize_parent(F.col("parent_dataset_id")).alias("parent_serial"),
+        *cols,
+    ).collect()
+    return {r["dataset_serial"]: r for r in reversed(rows)}
+
+
+def _dataset_step(
+    spark: SparkSession, views, batch: dict, frames: bool, child: str,
+    child_row,
+):
+    """The data_set step both atomic builders share, run against the
+    pinned tip (snapcatalog.PinnedTip): one keyed probe of data_set for
+    the batch and parent serials, one of ``child`` for the batch's
+    dataset ids, ids from the tip's stats bounds, and the new rows of
+    both tables built on the driver. ``child_row(batch_row, id,
+    dataset_id)`` shapes one child row, or gives None for a dataset that
+    gets none. Returns (the non-empty deltas by table, serial -> child
+    id). An id a DV delete frees is not reused, as with a Postgres
+    sequence (PinnedTip.max_bound)."""
+    if not batch:
+        return {}, {}
+    serials = sorted(batch)
+    parents = sorted({r["parent_serial"] for r in batch.values()} - {None})
+    tip = dict(
+        views.read(
+            "data_set", [("dataset_serial", "in", serials + parents)],
+            IMAGING_SCHEMAS["data_set"],
         ).select("dataset_serial", "id").collect()
+    )
+    nxt = views.max_bound("data_set", "id")
+    ds_ids, ds_rows = {}, []
+    for s in serials:
+        if s in tip:
+            ds_ids[s] = tip[s]
+            continue
+        nxt += 1
+        r = batch[s]
+        ds_rows.append((
+            s, r["description"], r["microscope"], frames, r["date_time"],
+            tip.get(r["parent_serial"]), nxt,
+        ))
+        ds_ids[s] = nxt
+    have = dict(
+        views.read(
+            child, [("dataset_id", "in", sorted(ds_ids.values()))],
+            IMAGING_SCHEMAS[child],
+        ).select("dataset_id", "id").collect()
+    )
+    nxt = views.max_bound(child, "id")
+    child_rows = []
+    for s in serials:
+        if ds_ids[s] in have:
+            continue
+        row = child_row(batch[s], nxt + 1, ds_ids[s])
+        if row is not None:
+            nxt += 1
+            have[ds_ids[s]] = nxt
+            child_rows.append(row)
+    deltas = {}
+    if ds_rows:
+        deltas["data_set"] = values_df(spark, ds_rows, DS_DELTA_SCHEMA)
+    if child_rows:
+        deltas[child] = values_df(spark, child_rows, IMAGING_SCHEMAS[child])
+    return deltas, {s: have[d] for s, d in ds_ids.items() if d in have}
+
+
+def _commit_atomic(spark, catalog_dir, build, keys, bloom_columns) -> dict:
+    """catalog_commit, with a typed empty delta for every table the
+    builder left out because nothing was new in it."""
+    from imagingdb_spark import snapcatalog as C
+
+    _, deltas = C.catalog_commit(
+        spark, catalog_dir, build, keys=keys, bloom_columns=bloom_columns
+    )
+    schemas = {**IMAGING_SCHEMAS, "data_set": DS_DELTA_SCHEMA}
+    return {
+        n: deltas.get(n, values_df(spark, [], schemas[n])) for n in keys
     }
-    rows = new_ds.collect()
-    ds_ids.update((r["dataset_serial"], r["id"]) for r in rows)
-    return values_df(spark, rows, new_ds.schema), ds_ids
 
 
 def insert_frames_atomic(
@@ -313,139 +385,84 @@ def insert_frames_atomic(
     readers resolving through the catalog tip see either none of the
     upload's rows in any table or all of them in every table.
 
-    The three builders run against the SAME pinned catalog-tip views
-    inside the commit retry loop, so the cross-table surrogate-id chain
-    (ds id → frames_global.dataset_id → frames.frames_global_id) is
-    serializable exactly like the per-table builder path — a losing racer
-    rebuilds every table from the winner's tip. Replay converges: all
-    three deltas anti-join empty and no new version publishes."""
-    from imagingdb_spark import snapcatalog as C
-    from imagingdb_spark.api import serial_to_date_time
-
+    The builder runs against the SAME pinned catalog tip inside the
+    commit retry loop, so the cross-table surrogate-id chain (ds id →
+    frames_global.dataset_id → frames.frames_global_id) is serializable
+    exactly like the per-table builder path — a losing racer rebuilds
+    every table from the winner's tip. The data_set and frames_global
+    rows come from _dataset_step; the frames delta stays a Spark plan
+    whose anti-join reads only the tip files whose frames_global_id
+    range can match. Replay converges: nothing is new, data_set and
+    frames_global are not written and no new version publishes."""
     _guard_legacy_catalog(catalog_dir)
     spark = datasets.sparkSession
-    w = Window.partitionBy(F.lit(0)).orderBy("dataset_serial")
     wf = Window.partitionBy(F.lit(0)).orderBy("dataset_serial", "file_name")
-    ds_fields = [
-        "dataset_serial", "description", "microscope", "frames",
-        "date_time", "parent_id", "id",
-    ]
-    summary = frames_rows.groupBy("dataset_serial").agg(
-        F.count(F.lit(1)).alias("nbr_frames"),
-        F.countDistinct("slice_idx").alias("nbr_slices"),
-        F.countDistinct("channel_idx").alias("nbr_channels"),
-        F.countDistinct("time_idx").alias("nbr_timepoints"),
-        F.countDistinct("pos_idx").alias("nbr_positions"),
+    batch = _batch_rows(
+        datasets, "storage_dir", "bit_depth", "im_width", "im_height",
+        "im_colors", "metadata_json",
     )
-    batch_serials = [
-        r[0] for r in datasets.select("dataset_serial").distinct().collect()
-    ]
 
-    def build(views: dict[str, DataFrame]) -> dict[str, DataFrame]:
-        def view(name: str) -> DataFrame:
-            v = views.get(name)
-            return v if v is not None else values_df(spark, [], IMAGING_SCHEMAS[name])
+    @functools.cache
+    def summary() -> dict:
+        # per-dataset global metadata from the actual frame rows; only a
+        # dataset new to frames_global needs it. Index sets are grid-sized,
+        # and sizing them needs one shuffle where countDistinct needs two
+        rows = frames_rows.groupBy("dataset_serial").agg(
+            F.count(F.lit(1)).alias("nbr_frames"),
+            F.size(F.collect_set("slice_idx")).alias("nbr_slices"),
+            F.size(F.collect_set("channel_idx")).alias("nbr_channels"),
+            F.size(F.collect_set("time_idx")).alias("nbr_timepoints"),
+            F.size(F.collect_set("pos_idx")).alias("nbr_positions"),
+        ).collect()
+        return {r["dataset_serial"]: r for r in rows}
 
-        ds_view, fg_view, fr_view = (
-            view("data_set"), view("frames_global"), view("frames")
+    def fg_row(r, fg_id: int, ds_id: int):
+        s = summary().get(r["dataset_serial"])
+        if s is None:
+            return None
+        return (
+            fg_id, s["nbr_frames"], r["im_width"], r["im_height"],
+            s["nbr_slices"], s["nbr_channels"], r["im_colors"],
+            s["nbr_timepoints"], s["nbr_positions"], r["bit_depth"],
+            r["storage_dir"], r["metadata_json"], ds_id,
         )
-        rows = datasets.select(
-            "dataset_serial",
-            "description",
-            "microscope",
-            F.lit(True).alias("frames"),
-            serial_to_date_time(F.col("dataset_serial")).alias("date_time"),
-            normalize_parent(F.col("parent_dataset_id")).alias(
-                "parent_serial"
-            ),
-        )
-        rows = resolve_parent_ids(rows, ds_view)
-        mx = ds_view.agg(F.coalesce(F.max("id"), F.lit(0))).collect()[0][0]
-        # anti-join HERE (not only in catalog_commit's guard) so the id
-        # mappings below are built from exactly the rows that will land
-        new_ds = (
-            rows.join(
-                ds_view.select("dataset_serial"), "dataset_serial",
-                "left_anti",
-            )
-            .withColumn(
-                "id", (F.row_number().over(w) + F.lit(mx)).cast("long")
-            )
-            .select(*ds_fields)
-        )
-        new_ds, ds_ids = _collect_ds_delta(spark, new_ds, ds_view, batch_serials)
-        ds_map = values_df(spark, list(ds_ids.items()), DS_MAP_DDL)
-        mxf = fg_view.agg(F.coalesce(F.max("id"), F.lit(0))).collect()[0][0]
-        new_fg = (
-            datasets.join(summary, "dataset_serial")
-            .join(F.broadcast(ds_map), "dataset_serial")
-            .join(
-                fg_view.select("dataset_id"), "dataset_id", "left_anti"
-            )
-            .withColumn(
-                "id", (F.row_number().over(w) + F.lit(mxf)).cast("long")
-            )
-            .select(
-                "id",
-                F.col("nbr_frames").cast("int").alias("nbr_frames"),
-                "im_width", "im_height",
-                F.col("nbr_slices").cast("int").alias("nbr_slices"),
-                F.col("nbr_channels").cast("int").alias("nbr_channels"),
-                "im_colors",
-                F.col("nbr_timepoints").cast("int").alias("nbr_timepoints"),
-                F.col("nbr_positions").cast("int").alias("nbr_positions"),
-                "bit_depth", "storage_dir", "metadata_json", "dataset_id",
-            )
-        )
-        fg_ids = {
-            r["dataset_id"]: r["id"]
-            for r in fg_view.filter(
-                F.col("dataset_id").isin(list(ds_ids.values()) or [-1])
-            ).select("dataset_id", "id").collect()
-        }
-        # collected once, like the ds delta: the id map below and the
-        # commit's write both read these rows
-        fg_rows = new_fg.collect()
-        fg_ids.update((r["dataset_id"], r["id"]) for r in fg_rows)
-        new_fg = values_df(spark, fg_rows, new_fg.schema)
-        serial_to_fg = values_df(
-            spark,
-            [(s, fg_ids[d]) for s, d in ds_ids.items() if d in fg_ids],
-            SERIAL_TO_FG_DDL,
-        )
-        mxr = fr_view.agg(F.coalesce(F.max("id"), F.lit(0))).collect()[0][0]
-        new_fr = (
-            frames_rows.join(F.broadcast(serial_to_fg), "dataset_serial")
-            .join(
-                fr_view.select("frames_global_id", "file_name"),
-                ["frames_global_id", "file_name"],
-                "left_anti",
-            )
-            .withColumn(
-                "id", (F.row_number().over(wf) + F.lit(mxr)).cast("long")
-            )
-            .select(
-                "id", "channel_idx", "slice_idx", "time_idx", "pos_idx",
-                "channel_name", "file_name", "sha256", "metadata_json",
-                "frames_global_id",
-            )
-        )
-        return {
-            "data_set": new_ds,
-            "frames_global": new_fg,
-            "frames": new_fr,
-        }
 
-    _, deltas = C.catalog_commit(
+    def build(views) -> dict[str, DataFrame]:
+        deltas, fg_ids = _dataset_step(
+            spark, views, batch, True, "frames_global", fg_row
+        )
+        if not fg_ids:
+            return deltas
+        landed = views.read(
+            "frames", [("frames_global_id", "in", sorted(set(fg_ids.values())))],
+            IMAGING_SCHEMAS["frames"],
+        ).select("frames_global_id", "file_name")
+        mx = views.max_bound("frames", "id")
+        deltas["frames"] = (
+            frames_rows.join(
+                F.broadcast(
+                    values_df(spark, sorted(fg_ids.items()), SERIAL_TO_FG_DDL)
+                ),
+                "dataset_serial",
+            )
+            .join(landed, ["frames_global_id", "file_name"], "left_anti")
+            .withColumn(
+                "id", (F.row_number().over(wf) + F.lit(mx)).cast("long")
+            )
+            .select(*IMAGING_SCHEMAS["frames"].names)
+        )
+        return deltas
+
+    deltas = _commit_atomic(
         spark,
         catalog_dir,
         build,
-        keys={
+        {
             "data_set": ["dataset_serial"],
             "frames_global": ["dataset_id"],
             "frames": ["frames_global_id", "file_name"],
         },
-        bloom_columns=bloom_columns,
+        bloom_columns,
     )
     return deltas["data_set"], deltas["frames_global"], deltas["frames"]
 
@@ -457,74 +474,27 @@ def insert_file_atomic(
 ) -> tuple[DataFrame, DataFrame]:
     """ingest.insert_file's two-table transaction (DataSet + FileGlobal,
     db_operations.py:225-274) as ONE atomic catalog commit — the file-type
-    twin of insert_frames_atomic."""
-    from imagingdb_spark import snapcatalog as C
-    from imagingdb_spark.api import serial_to_date_time
-
+    twin of insert_frames_atomic, on the same _dataset_step."""
     _guard_legacy_catalog(catalog_dir)
     spark = new_files.sparkSession
-    w = Window.partitionBy(F.lit(0)).orderBy("dataset_serial")
-    batch_serials = [
-        r[0] for r in new_files.select("dataset_serial").distinct().collect()
-    ]
+    batch = _batch_rows(
+        new_files, "storage_dir", "file_name", "metadata_json", "sha256"
+    )
 
-    def build(views: dict[str, DataFrame]) -> dict[str, DataFrame]:
-        def view(name: str) -> DataFrame:
-            v = views.get(name)
-            return v if v is not None else values_df(spark, [], IMAGING_SCHEMAS[name])
+    def fgl_row(r, fgl_id: int, ds_id: int):
+        return (
+            fgl_id, r["storage_dir"], r["file_name"], r["metadata_json"],
+            ds_id, r["sha256"],
+        )
 
-        ds_view, fgl_view = view("data_set"), view("file_global")
-        rows = new_files.select(
-            "dataset_serial",
-            "description",
-            F.col("microscope"),
-            F.lit(False).alias("frames"),
-            serial_to_date_time(F.col("dataset_serial")).alias("date_time"),
-            normalize_parent(F.col("parent_dataset_id")).alias(
-                "parent_serial"
-            ),
-        )
-        rows = resolve_parent_ids(rows, ds_view)
-        mx = ds_view.agg(F.coalesce(F.max("id"), F.lit(0))).collect()[0][0]
-        new_ds = (
-            rows.join(
-                ds_view.select("dataset_serial"), "dataset_serial",
-                "left_anti",
-            )
-            .withColumn(
-                "id", (F.row_number().over(w) + F.lit(mx)).cast("long")
-            )
-            .select(
-                "dataset_serial", "description", "microscope", "frames",
-                "date_time", "parent_id", "id",
-            )
-        )
-        new_ds, ds_ids = _collect_ds_delta(spark, new_ds, ds_view, batch_serials)
-        ds_map = values_df(spark, list(ds_ids.items()), DS_MAP_DDL)
-        mxf = fgl_view.agg(F.coalesce(F.max("id"), F.lit(0))).collect()[0][0]
-        new_fgl = (
-            new_files.select(
-                "dataset_serial", "storage_dir", "file_name",
-                "metadata_json", "sha256",
-            )
-            .join(F.broadcast(ds_map), "dataset_serial")
-            .join(fgl_view.select("dataset_id"), "dataset_id", "left_anti")
-            .withColumn(
-                "id", (F.row_number().over(w) + F.lit(mxf)).cast("long")
-            )
-            .select(
-                "id", "storage_dir", "file_name", "metadata_json",
-                "dataset_id", "sha256",
-            )
-        )
-        return {"data_set": new_ds, "file_global": new_fgl}
-
-    _, deltas = C.catalog_commit(
+    deltas = _commit_atomic(
         spark,
         catalog_dir,
-        build,
-        keys={"data_set": ["dataset_serial"], "file_global": ["dataset_id"]},
-        bloom_columns=bloom_columns,
+        lambda views: _dataset_step(
+            spark, views, batch, False, "file_global", fgl_row
+        )[0],
+        {"data_set": ["dataset_serial"], "file_global": ["dataset_id"]},
+        bloom_columns,
     )
     return deltas["data_set"], deltas["file_global"]
 
@@ -579,7 +549,10 @@ def upload_dataset(
     persisted ONCE so the blob write and the catalog insert don't
     re-decode (the payload rides executor memory/disk for the duration of
     the upload batch — dataset-batch-sized, not corpus-sized), and
-    catalog appends are anti-join guarded. `paths` (table name →
+    catalog appends are anti-join guarded. On a CatalogTarget the tip is
+    read by key-pruned probes, at most one per table, that open only the
+    files whose stats or blooms admit the batch's keys, and surrogate ids
+    come from the manifest's stats, not from a scan. `paths` (table name →
     parquet path) persists the three catalog tables. `backend_factory`
     overrides the blob store (the reference's local-vs-S3 storage_class
     switch, data_uploader.py:127-134): pass e.g.
@@ -632,7 +605,7 @@ def upload_dataset(
             .select(
                 "dataset_serial",
                 "description",
-                F.lit(microscope).alias("microscope"),
+                F.lit(microscope).cast("string").alias("microscope"),
                 "parent_dataset_id",
                 "storage_dir",
                 basename(F.col("src_path")).alias("file_name"),
@@ -746,7 +719,7 @@ def upload_dataset(
         datasets = man.select(
             "dataset_serial",
             "description",
-            F.lit(microscope).alias("microscope"),
+            F.lit(microscope).cast("string").alias("microscope"),
             "parent_dataset_id",
             "storage_dir",
             F.lit(gm["bit_depth"]).alias("bit_depth"),

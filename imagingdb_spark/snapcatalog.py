@@ -158,6 +158,57 @@ def _manifest_df(
     return df.filter(cond) if cond is not None else df
 
 
+class PinnedTip(dict):
+    """One catalog commit's tables as ``{name: DataFrame}``, plus two
+    reads of the same commit that touch only what a key can reach."""
+
+    def __init__(self, spark: SparkSession, catalog_dir: str, tables: dict):
+        super().__init__(
+            (name, _manifest_df(spark, catalog_dir, name, m))
+            for name, m in tables.items()
+        )
+        self._spark, self._dir, self._tables = spark, catalog_dir, tables
+
+    def read(self, name: str, where: list, schema: StructType) -> DataFrame:
+        """``name``'s rows matching ``where``, opening only the files the
+        group stats, footer min/max and bloom sidecars cannot rule out;
+        a typed empty frame when the tip lacks the table."""
+        m = self._tables.get(name)
+        if m is None:
+            return values_df(self._spark, [], schema)
+        return _manifest_df(self._spark, self._dir, name, m, where)
+
+    def max_bound(self, name: str, col: str) -> int:
+        """An upper bound on ``max(col)`` (0 for an absent or empty
+        table) from group and footer stats; only files without stats for
+        ``col`` are scanned. Rows hidden by a deletion vector still
+        count, so an id a DV delete frees is not reused, as with a
+        Postgres sequence; a file whose every row is deleted leaves the
+        manifest, and so does its part of the bound."""
+        m = self._tables.get(name)
+        if m is None:
+            return 0
+        tdir = _table_dir(self._dir, name)
+        refs = m["groups"] if m.get("groups") is not None else [None]
+        bound, unstated = 0, []
+        for ref in refs:
+            r = ((ref or {}).get("stats") or {}).get(col)
+            if r:
+                bound = max(bound, r[1])
+                continue
+            files = m["files"] if ref is None else S._read_group(tdir, ref["name"])
+            for fe in files:
+                s = (fe.get("stats") or {}).get(col) or {}
+                if s.get("max") is not None:
+                    bound = max(bound, s["max"])
+                elif s.get("nulls") is None or s["nulls"] != s.get("rows"):
+                    unstated.append(os.path.join(tdir, fe["path"]))
+        if unstated:
+            got = self._spark.read.parquet(*unstated).agg({col: "max"}).first()
+            bound = max(bound, got[0] or 0)
+        return bound
+
+
 def read_table_at(
     spark: SparkSession,
     catalog_dir: str,
@@ -248,6 +299,15 @@ def catalog_commit(
     commit actually publishes onto (the same builder discipline as
     snapshot_idempotent_append_delta, lifted to the table set).
 
+    ``views`` is a ``PinnedTip``: a plain dict of those DataFrames that
+    also answers two questions about the same pinned commit without
+    reading whole tables. ``views.read(name, where, schema)`` is a keyed
+    read that opens only the files the group stats, footer min/max and
+    bloom sidecars cannot rule out, and ``views.max_bound(name, col)`` is
+    an upper bound on ``max(col)`` from the manifest's stats, scanning
+    only files that carry none. A table the builder leaves out of its
+    result is not written at all.
+
     Per table, rows are deduplicated on ``keys[name]`` and anti-joined
     against the tip view, so a replay (same upload re-run) or a lost
     same-key race converges to an empty delta. When EVERY table's delta
@@ -286,10 +346,7 @@ def catalog_commit(
                     "(SnapshotTarget) or migrate the table into a catalog "
                     "commit first."
                 )
-        views = {
-            name: _manifest_df(spark, catalog_dir, name, m)
-            for name, m in tables_base.items()
-        }
+        views = PinnedTip(spark, catalog_dir, tables_base)
         new_rows = build(views)
         unknown = set(new_rows) - set(keys)
         if unknown:
@@ -644,11 +701,9 @@ def catalog_delete(
         base = _read_commit(catalog_dir, parent)
         tables_base: dict[str, dict] = dict(base["tables"])
         if build is not None:
-            views = {
-                name: _manifest_df(spark, catalog_dir, name, m)
-                for name, m in tables_base.items()
-            }
-            checked = _checked(build(views))
+            checked = _checked(
+                build(PinnedTip(spark, catalog_dir, tables_base))
+            )
         else:
             checked = static_checked
         missing = set(checked) - set(tables_base)

@@ -8,7 +8,9 @@ catalog readers seeing either no dataset or the whole dataset."""
 
 from __future__ import annotations
 
+import os
 import threading
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -46,7 +48,7 @@ def _src_file(tmp_path, name="stack.tif"):
     return str(p)
 
 
-def _upload(spark, src, tmp_path, cat_dir, serial=UP_SERIAL):
+def _upload(spark, src, tmp_path, cat_dir, serial=UP_SERIAL, **kw):
     man = spark.createDataFrame(
         [(serial, src, "Testing", "none")],
         "dataset_serial string, file_name string, description string, "
@@ -63,6 +65,24 @@ def _upload(spark, src, tmp_path, cat_dir, serial=UP_SERIAL):
         global_meta={
             "im_width": 8, "im_height": 8, "nbr_channels": 2, "nbr_slices": 3,
         },
+        paths=CatalogTarget(cat_dir),
+        **kw,
+    )
+
+
+def _upload_file(spark, src, tmp_path, cat_dir, serial=UP_SERIAL):
+    man = spark.createDataFrame(
+        [(serial, src, "Testing", "none")],
+        "dataset_serial string, file_name string, description string, "
+        "parent_dataset_id string",
+    )
+    cat = {n: spark.createDataFrame([], s) for n, s in IMAGING_SCHEMAS.items()}
+    return flows.upload_dataset(
+        spark,
+        man,
+        cat,
+        storage_root=str(tmp_path / "store"),
+        upload_type="file",
         paths=CatalogTarget(cat_dir),
     )
 
@@ -558,6 +578,198 @@ class TestAtomicUpload:
         views = C.catalog_views(spark, cat_dir, IMAGING_SCHEMAS)
         assert views["frames"].count() == 0
         assert views["file_global"].count() == 1
+
+
+def _spy_writes(monkeypatch) -> list:
+    """Record the table of every data-file write a commit makes."""
+    written, real = [], S._write_data_files
+
+    def spy(df, table_dir):
+        written.append(os.path.basename(table_dir))
+        return real(df, table_dir)
+
+    monkeypatch.setattr(S, "_write_data_files", spy)
+    return written
+
+
+class TestAtomicUploadDeltas:
+    """What an atomic upload reads and writes: ids come from the tip's
+    manifest stats, each tip table gets one key-pruned probe, and a table
+    whose delta is known to be empty is never written."""
+
+    def test_microscope_named_after_unnamed(self, spark, tmp_path):
+        cat_dir = str(tmp_path / "cat")
+        src = _src_file(tmp_path)
+        _upload(spark, src, tmp_path, cat_dir)
+        _upload(spark, src, tmp_path, cat_dir, serial=UP_SERIAL2,
+                microscope="Leica")
+        got = {
+            r["dataset_serial"]: r["microscope"]
+            for r in C.catalog_read(spark, cat_dir, "data_set").collect()
+        }
+        assert got == {UP_SERIAL: None, UP_SERIAL2: "Leica"}
+
+    @staticmethod
+    def _ids(spark, cat_dir, name):
+        return [r["id"] for r in C.catalog_read(spark, cat_dir, name).collect()]
+
+    def test_ids_stay_unique_after_dv_delete(self, spark, tmp_path):
+        cat_dir = str(tmp_path / "cat")
+        src = _src_file(tmp_path)
+        _upload(spark, src, tmp_path, cat_dir)
+        _upload(spark, src, tmp_path, cat_dir, serial=UP_SERIAL2)
+        ds = C.catalog_read(spark, cat_dir, "data_set")
+        ds_id = ds.filter(ds.dataset_serial == UP_SERIAL2).first()["id"]
+        fg = C.catalog_read(spark, cat_dir, "frames_global")
+        fg_id = fg.filter(fg.dataset_id == ds_id).first()["id"]
+        # the newest dataset holds every table's highest id
+        assert ds_id == 2 and fg_id == 2
+        assert max(self._ids(spark, cat_dir, "frames")) == 12
+        C.catalog_delete(
+            spark, cat_dir,
+            {
+                "data_set": [("dataset_serial", "=", UP_SERIAL2)],
+                "frames_global": [("dataset_id", "=", ds_id)],
+                "frames": [("frames_global_id", "=", fg_id)],
+            },
+            mode="dv",
+        )
+        _upload(spark, src, tmp_path, cat_dir,
+                serial="TEST-2005-06-11-20-00-00-1000")
+        # the deleted serial comes back as a new dataset
+        _upload(spark, src, tmp_path, cat_dir, serial=UP_SERIAL2)
+        ds = C.catalog_read(spark, cat_dir, "data_set").collect()
+        fg = C.catalog_read(spark, cat_dir, "frames_global").collect()
+        fr = C.catalog_read(spark, cat_dir, "frames").collect()
+        assert len(ds) == len({r["id"] for r in ds}) == 3
+        assert len(fg) == len({r["id"] for r in fg}) == 3
+        assert len(fr) == len({r["id"] for r in fr}) == 18
+        assert {r["dataset_id"] for r in fg} == {r["id"] for r in ds}
+        assert Counter(r["frames_global_id"] for r in fr) == {
+            r["id"]: 6 for r in fg
+        }
+
+    def test_max_bound_scans_files_without_stats(self, spark, tmp_path):
+        import json
+
+        cat = str(tmp_path / "cat")
+        for lo in (0, 50):
+            C.catalog_commit(
+                spark, cat,
+                lambda views, lo=lo: {
+                    "t": spark.range(lo + 1, lo + 51).selectExpr(
+                        "id", "string(id) AS v"
+                    )
+                },
+                keys={"t": ["id"]},
+            )
+        tables = C.catalog_manifest(cat)["tables"]
+        tip = C.PinnedTip(spark, cat, tables)
+        assert tip.max_bound("t", "id") == 100
+        assert tip.max_bound("absent", "id") == 0
+        # strip the stats of every file holding an id above 50, in its
+        # group file and in the group summaries of the pinned manifest
+        gdir = S._gdir(C._table_dir(cat, "t"))
+        stripped = 0
+        for ref in tables["t"]["groups"]:
+            ref.pop("stats", None)
+            path = os.path.join(gdir, ref["name"])
+            with open(path) as f:
+                group = json.load(f)
+            for fe in group["files"]:
+                if fe["stats"]["id"]["max"] > 50:
+                    del fe["stats"]
+                    stripped += 1
+            with open(path, "w") as f:
+                json.dump(group, f)
+        assert stripped >= 1
+        tip = C.PinnedTip(spark, cat, tables)
+        assert tip.max_bound("t", "id") == 100
+
+    def test_max_bound_counts_rows_a_dv_delete_hid(self, spark, tmp_path):
+        cat = str(tmp_path / "cat")
+        C.catalog_commit(
+            spark, cat,
+            lambda views: {"t": spark.range(1, 101).coalesce(2)},
+            keys={"t": ["id"]},
+        )
+        C.catalog_delete(spark, cat, {"t": [("id", "=", 100)]}, mode="dv")
+        assert C.catalog_read(spark, cat, "t").agg(F.max("id")).first()[0] == 99
+        tip = C.PinnedTip(spark, cat, C.catalog_manifest(cat)["tables"])
+        assert tip.max_bound("t", "id") == 100
+
+    def test_replay_writes_frames_only_and_publishes_nothing(
+        self, spark, tmp_path, monkeypatch
+    ):
+        cat_dir = str(tmp_path / "cat")
+        src = _src_file(tmp_path)
+        _upload(spark, src, tmp_path, cat_dir)
+        written = _spy_writes(monkeypatch)
+        out = _upload(spark, src, tmp_path, cat_dir)
+        assert written == ["frames"]
+        assert C.catalog_versions(cat_dir) == [1]
+        assert [out[n].count() for n in ("data_set", "frames_global", "frames")] == [0, 0, 0]
+
+    def test_probes_skip_files_the_keys_cannot_touch(
+        self, spark, tmp_path, monkeypatch
+    ):
+        cat_dir = str(tmp_path / "cat")
+        src = _src_file(tmp_path)
+        _upload(spark, src, tmp_path, cat_dir)
+        probes = {}
+        real = S._resolve_pruned
+
+        def spy(table_dir, m, where, plan=None):
+            plan = {} if plan is None else plan
+            out = real(table_dir, m, where, plan)
+            if where:
+                probes[os.path.basename(table_dir)] = (where, plan)
+            return out
+
+        monkeypatch.setattr(S, "_resolve_pruned", spy)
+        # sorts after the only data_set file's max serial
+        _upload(spark, src, tmp_path, cat_dir, serial=UP_SERIAL2)
+        assert set(probes) == {"data_set", "frames_global", "frames"}
+        assert probes["data_set"][0][0][0] == "dataset_serial"
+        for name, (_, plan) in probes.items():
+            assert plan["files_total"] >= 1, name
+            assert plan["files_kept"] == 0, name
+        # a replay's probes find exactly the files of the uploaded dataset
+        probes.clear()
+        _upload(spark, src, tmp_path, cat_dir, serial=UP_SERIAL2)
+        assert probes["data_set"][1]["files_kept"] == 1
+        assert probes["frames_global"][1]["files_kept"] == 1
+        assert probes["frames"][1]["files_kept"] >= 1
+        assert (
+            probes["frames"][1]["files_kept"]
+            < probes["frames"][1]["files_total"]
+        )
+
+    def test_file_and_frames_uploads_share_the_id_sequence(
+        self, spark, tmp_path, monkeypatch
+    ):
+        cat_dir = str(tmp_path / "cat")
+        _upload_file(spark, _src_file(tmp_path, "whole.bin"), tmp_path, cat_dir)
+        written = _spy_writes(monkeypatch)
+        out = _upload_file(
+            spark, _src_file(tmp_path, "whole.bin"), tmp_path, cat_dir
+        )
+        assert written == [] and C.catalog_versions(cat_dir) == [1]
+        assert out["data_set"].count() == 0 and out["file_global"].count() == 0
+        _upload(spark, _src_file(tmp_path), tmp_path, cat_dir, serial=UP_SERIAL2)
+        assert C.catalog_versions(cat_dir) == [1, 2]
+        ds = {
+            r["dataset_serial"]: (r["id"], r["frames"])
+            for r in C.catalog_read(spark, cat_dir, "data_set").collect()
+        }
+        assert ds == {UP_SERIAL: (1, False), UP_SERIAL2: (2, True)}
+        fgl = C.catalog_read(spark, cat_dir, "file_global").collect()
+        fg = C.catalog_read(spark, cat_dir, "frames_global").collect()
+        assert [(r["id"], r["dataset_id"]) for r in fgl] == [(1, 1)]
+        assert [(r["id"], r["dataset_id"]) for r in fg] == [(1, 2)]
+        fr = C.catalog_read(spark, cat_dir, "frames").collect()
+        assert sorted(r["id"] for r in fr) == list(range(1, 7))
+        assert {r["frames_global_id"] for r in fr} == {1}
 
 
 class TestCatalogBloomIndex:
